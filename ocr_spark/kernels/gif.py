@@ -12,10 +12,18 @@ frame-sampling/video-OCR path of ``operators.multimodal``.
   tables, the 4-pass GIF interlace, frame composition on the logical
   screen with disposal methods 0/1 (leave), 2 (restore background) and
   3 (restore previous), transparency via the GCE transparent index.
+  The LZW decode builds no dictionary: between clear codes each code's
+  width depends only on its index, so codes unpack with NumPy bit
+  arithmetic (only the first 16 of each run are read one by one, which
+  keeps runs of clears and short runs cheap), and every non-literal
+  code copies an earlier span of the output, so one cumsum of lengths
+  and O(log n) rounds of pointer doubling over source positions resolve
+  the pixels.
   Frames yield as (H, W, 3) uint8 RGB composites, one at a time — peak
-  memory is the canvas plus one frame regardless of animation length
-  (frame N depends on the composite of N-1, so skipped frames still
-  decode; they just don't yield).
+  memory is the canvas plus one frame (and ~8 bytes per frame pixel
+  while its LZW resolves) regardless of animation length (frame N
+  depends on the composite of N-1, so skipped frames still decode; they
+  just don't yield).
 - ``encode_gif``: GIF89a writer — global color table, optional per-frame
   delays, real LZW compression with dictionary reset at 4096 codes.
   The fixture generator for the decoder's tests and the media contract.
@@ -29,6 +37,7 @@ discipline turns that into a row skip.
 from __future__ import annotations
 
 import struct
+from functools import lru_cache
 
 import numpy as np
 
@@ -97,59 +106,182 @@ def _lzw_encode(indices: np.ndarray, min_code: int) -> bytes:
     return bytes(out)
 
 
+@lru_cache(maxsize=None)
+def _code_widths(min_code: int) -> np.ndarray:
+    """Bit width of the ``j``-th code after a clear, for j < 4096. The
+    table holds ``clear + 1 + j`` entries when code ``j`` is read (code 0
+    adds none, every later code adds one), and the width grows as soon as
+    the table reaches the next power of two, capped at 12 bits; from
+    j = 4096 - clear - 1 on it stays 12. Seven 32 KB tables per process."""
+    size = (1 << min_code) + 1 + np.arange(4096)
+    bits = np.frexp(size)[1].astype(np.int64)  # == size.bit_length()
+    return np.minimum(12, np.maximum(min_code + 1, bits))
+
+
+def _run_codes(
+    buf: np.ndarray, nbits: int, pos: int, min_code: int, j0: int,
+    budget: int, chunk: int,
+) -> tuple[np.ndarray, int, int]:
+    """Codes ``j0, j0 + 1, ...`` of one run between clears, the first at
+    bit ``pos`` → ``(codes, terminator, next_pos)``. The width schedule is
+    known in advance, so codes unpack in vectorized chunks, the first of
+    ``chunk`` codes and each later one twice the size, until a clear or
+    EOI shows up; no chunk reaches past the data, so the work stays
+    linear in the codes read. ``budget`` bounds the codes returned: every
+    non-terminator code emits at least one pixel."""
+    clear = 1 << min_code
+    schedule = _code_widths(min_code)
+    parts: list[np.ndarray] = []
+    got = 0
+    while True:
+        n = min(chunk, (nbits - pos) // (min_code + 1) + 1, budget - got + 1)
+        widths = schedule[j0 : j0 + n]
+        if len(widths) < n:  # past a full table: 12 bits from here on
+            widths = np.concatenate(
+                [widths, np.full(n - len(widths), 12, np.int64)]
+            )
+        ends = pos + np.cumsum(widths)
+        starts = ends - widths
+        n = int(np.searchsorted(starts, nbits))  # codes that start in data
+        if n == 0:
+            raise ValueError("truncated LZW stream")
+        widths, starts, ends = widths[:n], starts[:n], ends[:n]
+        byte = starts >> 3
+        word = buf[byte] | (buf[byte + 1] << 8) | (buf[byte + 2] << 16)
+        codes = (word >> (starts & 7)) & ((1 << widths) - 1)
+        stop = np.flatnonzero((codes >> 1) == (clear >> 1))  # clear or EOI
+        if len(stop) and ends[stop[0]] <= nbits:
+            t = int(stop[0])
+            parts.append(codes[:t])
+            return np.concatenate(parts), int(codes[t]), int(ends[t])
+        if int(ends[-1]) > nbits:
+            raise ValueError("truncated LZW stream")
+        got += n
+        if got > budget:
+            raise ValueError("LZW output exceeds frame size")
+        parts.append(codes)
+        pos = int(ends[-1])
+        j0 += n
+        chunk *= 2
+
+
+def _expand(codes: np.ndarray, run_start: np.ndarray, clear: int,
+            budget: int) -> np.ndarray:
+    """Pixels of all runs of a frame at once, without a per-code loop.
+
+    ``run_start[t]`` is the global index of the first code of code
+    ``t``'s run, so code ``t`` is code ``j = t - run_start[t]`` of its
+    run. Code j ≥ 1 of a run defines table entry ``clear + 1 + j`` as
+    (output of code j-1) + (first pixel of the output of code j), so a
+    non-literal code ``c`` made by code ``m = c - clear - 1`` of its run
+    emits the output of code ``m-1`` followed by the first pixel of code
+    ``m`` (``m == j`` is the KwKwK case) — and since the outputs of codes
+    m-1 and m are adjacent, that is the span
+    ``out[off[m-1] : off[m-1] + len[t]]``. Lengths resolve by pointer
+    doubling over codes, offsets by one cumsum, and every pixel that is
+    not a literal copies a strictly earlier position, fewer than
+    2·max(len) copies away from a literal, so pointer doubling over
+    positions resolves the frame in O(log len) rounds."""
+    t = np.arange(len(codes))
+    lit = codes < clear
+    if not lit[t == run_start].all():
+        raise ValueError("bad first LZW code")
+    if (codes > clear + 1 + t - run_start).any():
+        raise ValueError("LZW code out of range")
+    prev = run_start + np.where(lit, 0, codes - clear - 2)  # code m-1
+    # len = 1 for a literal, else len[m-1] + 1: count hops to a literal
+    ptr = np.where(lit, t, prev)
+    hops = (~lit).astype(np.int64)
+    while True:
+        nxt = ptr[ptr]
+        if np.array_equal(nxt, ptr):
+            break
+        hops += hops[ptr]
+        ptr = nxt
+    lengths = hops + 1
+    total = int(lengths.sum())
+    if total > budget:
+        raise ValueError("LZW output exceeds frame size")
+    off = np.cumsum(lengths) - lengths
+    # pixel → source pixel; literals point at themselves. int32 positions
+    # (a frame is < 2**31 pixels) keep the peak near 8 bytes per pixel.
+    shift = np.where(lit, 0, off[prev] - off).astype(np.int32)
+    src = np.repeat(shift, lengths)
+    src += np.arange(total, dtype=np.int32)
+    for _ in range(int(2 * lengths.max()).bit_length()):
+        src = src[src]
+    # every source is a literal's pixel, whose code is its value (< 256)
+    return np.repeat(codes.astype(np.uint8), lengths)[src]
+
+
+# codes read one at a time at the head of every run before the run
+# switches to vectorized unpacking: runs of clears and short runs then
+# cost O(1) per code instead of a vectorized chunk per run
+_HEAD_CODES = 16
+
+
 def _lzw_decode(data: bytes, min_code: int, expected: int) -> np.ndarray:
-    """GIF LZW code bytes → uint8 index array of ``expected`` pixels."""
+    """GIF LZW code bytes → uint8 index array of ``expected`` pixels.
+
+    The runs between clear codes are cut out one at a time: the first
+    ``_HEAD_CODES`` codes of a run by scalar reads, the rest, if the run
+    is longer, by ``_run_codes`` in vectorized chunks (sized from the
+    previous run; 4096 codes, one full table, for the first). Every pixel
+    of the frame then resolves in one vectorized pass (``_expand``)."""
     if not 2 <= min_code <= 8:
         raise ValueError(f"bad LZW min code size {min_code}")
     clear = 1 << min_code
     eoi = clear + 1
-    width = min_code + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    out = bytearray()
-    acc = 0
-    nbits = 0
+    head_widths = _code_widths(min_code)[:_HEAD_CODES].tolist()
+    nbits = 8 * len(data)
+    buf = np.frombuffer(data + b"\x00\x00\x00", np.uint8).astype(np.int64)
+    pieces: list[np.ndarray] = []  # all codes of the frame, in order
+    scalar: list[int] = []  # scalar-read codes not yet in ``pieces``
+    run_lens: list[int] = []
+    n_codes = 0
     pos = 0
-    prev: bytes | None = None
-    n = len(data)
-    while True:
-        while nbits < width:
-            if pos >= n:
+    chunk = 4096
+    term = clear
+    while term != eoi:
+        run_len = 0
+        term = None
+        for width in head_widths:
+            if pos + width > nbits:
                 raise ValueError("truncated LZW stream")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = list(base)
-            width = min_code + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("bad first LZW code")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]  # the KwKwK case
-            table.append(entry)
-        else:
-            raise ValueError("LZW code out of range")
-        out.extend(entry)
-        if len(out) > expected:
+            word = int.from_bytes(data[pos >> 3 : (pos >> 3) + 3], "little")
+            code = (word >> (pos & 7)) & ((1 << width) - 1)
+            pos += width
+            if code == clear or code == eoi:
+                term = code
+                break
+            scalar.append(code)
+            run_len += 1
+        n_codes += run_len
+        if n_codes > expected:
             raise ValueError("LZW output exceeds frame size")
-        prev = entry
-        if len(table) == (1 << width) and width < 12:
-            width += 1
+        if term is None:
+            tail, term, pos = _run_codes(
+                buf, nbits, pos, min_code, run_len, expected - n_codes, chunk
+            )
+            pieces += [np.asarray(scalar, dtype=np.int64), tail]
+            scalar = []
+            run_len += len(tail)
+            n_codes += len(tail)
+            chunk = max(64, 2 * len(tail))
+        if run_len:
+            run_lens.append(run_len)
+    if not run_lens:
+        out = np.zeros(0, dtype=np.uint8)
+    else:
+        pieces.append(np.asarray(scalar, dtype=np.int64))
+        starts = np.cumsum(run_lens) - run_lens
+        out = _expand(
+            np.concatenate(pieces), np.repeat(starts, run_lens), clear,
+            expected,
+        )
     if len(out) != expected:
         raise ValueError(f"LZW yielded {len(out)} of {expected} pixels")
-    return np.frombuffer(bytes(out), dtype=np.uint8)
+    return out
 
 
 # --------------------------------------------------------------------------

@@ -36,8 +36,9 @@ validated against the buffer, Huffman tables are structurally checked
 ``ValueError``.
 
 Everything batch-shaped is vectorized NumPy (DCT/IDCT/quantization run
-over all blocks at once via einsum); only the inherently sequential
-entropy coding walks bit-by-bit in Python.
+over all blocks at once: einsum in the encoder, two stacked matmuls in
+the decoder); only the inherently sequential entropy coding runs in
+Python, one Huffman-table probe per coefficient (see ``_EntropyReader``).
 """
 
 from __future__ import annotations
@@ -170,23 +171,48 @@ def _build_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]
 
 @lru_cache(maxsize=8)
 def _build_decode_lut(bits: tuple[int, ...], vals: tuple[int, ...]) -> list[int]:
-    """16-bit-peek Huffman LUT: index = the next 16 bits of the stream,
-    entry = ``(code_length << 8) | symbol`` (0 for bit patterns that are
-    no valid code). Cached — the Annex-K tables shared by every standard
-    JPEG build their 64Ki table once per process, not once per image.
-    maxsize=8 keeps the four Annex-K tables (+ a working set) resident
-    while bounding the per-executor footprint to ~16 MB: real corpora of
-    optimizer-encoded JPEGs carry unique per-image tables, so a large
-    cache would pin ~2 MB per slot at near-zero hit rate."""
+    """16-bit-peek Huffman LUT with stb_image-style fast-AC fields folded
+    into the same entries: index = the next 16 bits of the stream, entry =
+    ``(value << 13) | (advance << 8) | symbol`` (0 for bit patterns that
+    are no valid code). The symbol is read as (run << 4) | size, which
+    also covers DC tables (run 0, size = category):
+
+    - size > 0 and code length + size ≤ 16: the magnitude bits sit inside
+      the peek, so ``value`` is the sign-extended coefficient (never 0)
+      and ``advance`` = code length + size — one probe decodes the whole
+      coefficient;
+    - otherwise ``value`` is 0 and ``advance`` is the code length alone
+      (EOB/ZRL/EOBn, DC category 0, or a long code whose magnitude bits
+      the caller still reads from the bit window).
+
+    Cached — the Annex-K tables shared by every standard JPEG build their
+    64Ki table once per process, not once per image. Every entry stays
+    below 2**30 in magnitude (|value| < 2**15), so each is one 28-byte
+    int: ~2.4 MB per table, and maxsize=8 keeps the four Annex-K tables
+    (+ a working set) resident while bounding the per-executor footprint
+    to ~19 MB. Real corpora of optimizer-encoded JPEGs carry unique
+    per-image tables, so a larger cache would pin ~2.4 MB per slot at
+    near-zero hit rate."""
     if sum(bits) != len(vals) or sum(bits) > 256:
         raise ValueError("malformed Huffman table")
-    lut = np.zeros(65536, dtype=np.int32)
+    lut = np.zeros(65536, dtype=np.int64)
+    peek = np.arange(65536, dtype=np.int64)
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
             lo = code << (16 - length)
-            lut[lo : lo + (1 << (16 - length))] = (length << 8) | vals[k]
+            hi = lo + (1 << (16 - length))
+            rs = vals[k]
+            s = rs & 15
+            if s and length + s <= 16:
+                extra = (peek[lo:hi] >> (16 - length - s)) & ((1 << s) - 1)
+                value = np.where(
+                    extra >= (1 << (s - 1)), extra, extra - (1 << s) + 1
+                )
+                lut[lo:hi] = (value << 13) | ((length + s) << 8) | rs
+            else:
+                lut[lo:hi] = (length << 8) | rs
             code += 1
             k += 1
         if code > (1 << length):
@@ -650,39 +676,41 @@ def _split_entropy(
 class _EntropyReader:
     """LUT-driven MSB-first bit reader over ONE destuffed entropy segment.
 
-    ``w40[i]`` holds bytes ``i..i+4`` big-endian (a Python list of plain
-    ints — list indexing beats NumPy scalar boxing in the per-symbol
-    loop), so ONE index serves both a 16-bit Huffman-LUT probe and the
-    coefficient's extra bits: the worst case (7-bit byte offset + 16-bit
-    code + 15-bit magnitude = 38 bits) still fits the window. A Huffman
-    decode is a single probe of a 64Ki lookup table (entries pack
-    ``(code_length << 8) | symbol``, 0 = invalid code) instead of a
-    bit-serial walk. Entropy decode is the only inherently sequential part
-    of JPEG — everything downstream (dequant/IDCT/upsample) is vectorized
-    NumPy — so it is the part that must not cost a dict probe per BIT."""
+    ``peek[p]`` is the 16 bits of the stream starting at bit ``p``, for
+    every bit position (a uint16 array read through a ``memoryview``), so
+    a Huffman decode is ONE double index, ``lut[peek[p]]``, into the 64Ki
+    table built by ``_build_decode_lut``, and a coefficient's magnitude
+    bits are ``peek[p + code_length] >> (16 - size)``. The table entries
+    carry the fast-AC fields: whenever code length + magnitude bits ≤ 16
+    the same probe yields the bit advance, the zero run and the
+    sign-extended coefficient, so the common coefficient costs one probe
+    and no further bit reads.
 
-    __slots__ = ("w40", "pos", "nbits")
+    The block decoders (``decode_block`` here, ``_ac_first_block`` /
+    ``_ac_refine_block`` for progressive scans) keep the bit position in a
+    local and index ``peek`` inline; coefficients land in the caller's
+    int64 coefficient store through a ``memoryview``, a C-level buffer
+    write with no per-coefficient NumPy call. ``peek`` runs 256 zero bytes
+    past the segment, more than one block can consume (≤ 63 symbols of
+    ≤ 31 bits plus the DC), so a block decoder checks for truncation once
+    at block entry instead of per symbol; a block that reads into the
+    padding leaves ``pos > nbits``, which the scan end and every restart
+    boundary reject. Entropy decode is the only inherently sequential part
+    of JPEG — everything downstream (dequant/IDCT/upsample) is vectorized
+    NumPy."""
+
+    __slots__ = ("peek", "pos", "nbits")
 
     def __init__(self, seg: bytes) -> None:
-        b = np.frombuffer(seg + b"\x00" * 5, np.uint8).astype(np.uint64)
-        self.w40 = (
-            (b[:-4] << 32) | (b[1:-3] << 24) | (b[2:-2] << 16)
-            | (b[3:-1] << 8) | b[4:]
-        ).tolist()
+        b = np.frombuffer(seg + b"\x00" * 260, np.uint8).astype(np.uint32)
+        w24 = (b[:-2] << 16) | (b[1:-1] << 8) | b[2:]
+        shifts = np.arange(8, 0, -1, dtype=np.uint32)
+        # the uint16 cast keeps the low 16 bits of each shifted window
+        self.peek = memoryview(
+            (w24[:, None] >> shifts).astype(np.uint16).ravel()
+        )
         self.pos = 0
         self.nbits = 8 * len(seg)
-
-    def huff(self, lut: list[int]) -> int:
-        """Decode one Huffman symbol (progressive scans; the baseline hot
-        path uses the fused ``decode_block`` instead)."""
-        p = self.pos
-        if p >= self.nbits:
-            raise ValueError("truncated entropy-coded data")
-        v = lut[(self.w40[p >> 3] >> (24 - (p & 7))) & 0xFFFF]
-        if v == 0:
-            raise ValueError("invalid Huffman code")
-        self.pos = p + (v >> 8)
-        return v & 0xFF
 
     def receive(self, n: int) -> int:
         """Read ``n`` (≤ 16) raw MSB-first bits."""
@@ -692,72 +720,87 @@ class _EntropyReader:
         if p >= self.nbits:
             raise ValueError("truncated entropy-coded data")
         self.pos = p + n
-        return (self.w40[p >> 3] >> (40 - (p & 7) - n)) & ((1 << n) - 1)
+        return self.peek[p] >> (16 - n)
+
+    def dc_diff(self, lut: list[int]) -> int:
+        """Decode one DC difference (Huffman category + magnitude bits)."""
+        p = self.pos
+        if p >= self.nbits:
+            raise ValueError("truncated entropy-coded data")
+        v = lut[self.peek[p]]
+        if v == 0:
+            raise ValueError("invalid Huffman code")
+        t = v & 0xFF
+        if t > 11:
+            raise ValueError("invalid DC category")
+        d = v >> 13
+        if d or not t:  # fast entry, or category 0
+            self.pos = p + ((v >> 8) & 31)
+            return d
+        ln = (v >> 8) & 31
+        self.pos = p + ln + t
+        return _extend(self.peek[p + ln] >> (16 - t), t)
 
     def decode_block(
         self,
         dc_lut: list[int],
         ac_lut: list[int],
         pred: int,
-        ks: list[int],
-        vals: list[int],
-        base_k: int,
+        coef: memoryview,
+        base: int,
     ) -> int:
-        """Decode ONE 8×8 block. Nonzero coefficients are appended to
-        ``ks``/``vals`` as (``base_k`` + zigzag index, value) for a single
-        vectorized scatter per component after the MCU loop — no per-
-        coefficient NumPy writes. Returns the updated DC predictor."""
-        w = self.w40
+        """Decode ONE 8×8 block of a sequential scan into
+        ``coef[base : base + 64]`` (zigzag order). Returns the updated DC
+        predictor."""
+        pred += self.dc_diff(dc_lut)
+        coef[base] = pred
+        peek = self.peek
         p = self.pos
-        nb = self.nbits
-        if p >= nb:
-            raise ValueError("truncated entropy-coded data")
-        win = w[p >> 3]
-        o = p & 7
-        v = dc_lut[(win >> (24 - o)) & 0xFFFF]
-        if v == 0:
-            raise ValueError("invalid Huffman code")
-        t = v & 0xFF
-        if t > 11:
-            raise ValueError("invalid DC category")
-        ln = v >> 8
-        if t:
-            extra = (win >> (40 - o - ln - t)) & ((1 << t) - 1)
-            pred += extra if extra >= (1 << (t - 1)) else extra - (1 << t) + 1
-        p += ln + t
-        if pred:
-            ks.append(base_k)
-            vals.append(pred)
-        k = 1
-        while k < 64:
-            if p >= nb:
-                raise ValueError("truncated entropy-coded data")
-            win = w[p >> 3]
-            o = p & 7
-            v = ac_lut[(win >> (24 - o)) & 0xFFFF]
+        end = base + 64
+        kb = base + 1
+        while kb < end:
+            v = ac_lut[peek[p]]
+            val = v >> 13
+            if val:  # fast AC: run, advance and value from one probe
+                kb += (v >> 4) & 15
+                if kb >= end:
+                    raise ValueError("AC run past block end")
+                coef[kb] = val
+                kb += 1
+                p += (v >> 8) & 31
+                continue
             if v == 0:
                 raise ValueError("invalid Huffman code")
-            ln = v >> 8
-            rs = v & 0xFF
-            s = rs & 15
+            ln = (v >> 8) & 31
+            s = v & 15
             if s == 0:
                 p += ln
-                if rs == 0xF0:  # ZRL: 16 zeros
-                    k += 16
+                if v & 0xF0 == 0xF0:  # ZRL: 16 zeros
+                    kb += 16
                     continue
                 break  # EOB
-            k += rs >> 4
-            if k > 63:
+            kb += (v >> 4) & 15
+            if kb >= end:
                 raise ValueError("AC run past block end")
-            extra = (win >> (40 - o - ln - s)) & ((1 << s) - 1)
+            coef[kb] = _extend(peek[p + ln] >> (16 - s), s)
+            kb += 1
             p += ln + s
-            ks.append(base_k + k)
-            vals.append(
-                extra if extra >= (1 << (s - 1)) else extra - (1 << s) + 1
-            )
-            k += 1
         self.pos = p
         return pred
+
+
+def _next_reader(segs, seg_idx: int, reader: _EntropyReader) -> _EntropyReader:
+    """Cross the RSTn marker that ended ``segs[seg_idx]``: check the
+    marker is present and in sequence and that the finished segment was
+    not over-read, then start a reader on the next segment."""
+    rst_n = segs[seg_idx][1]
+    if rst_n is None:
+        raise ValueError("missing restart marker")
+    if rst_n != (seg_idx & 7):
+        raise ValueError("restart marker out of sequence")
+    if reader.pos > reader.nbits:
+        raise ValueError("truncated entropy-coded data")
+    return _EntropyReader(segs[seg_idx + 1][0])  # _split_entropy: it exists
 
 
 def jpeg_dims(data: bytes) -> tuple[int, int, int]:
@@ -777,6 +820,8 @@ def jpeg_dims(data: bytes) -> tuple[int, int, int]:
         if length < 2 or pos + 2 + length > len(data):
             raise ValueError("truncated marker segment")
         if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            if length < 8:
+                raise ValueError("truncated SOF segment")
             _prec, h, w, ncomp = struct.unpack_from(">BHHB", data, pos + 4)
             return w, h, ncomp
         pos += 2 + length
@@ -876,48 +921,32 @@ def _decode_baseline_scan(
             raise ValueError("scan references undefined DHT")
         comp_tabs.append((dc_tab, ac_tab))
 
+    coefs = [memoryview(b.reshape(-1)) for b in comp_blocks]
     segs, _end = _split_entropy(data, seg_end)
     seg_idx = 0
     reader = _EntropyReader(segs[0][0])
     preds = [0] * len(comps)
-    comp_ks: list[list[int]] = [[] for _ in comps]
-    comp_vals: list[list[int]] = [[] for _ in comps]
     rst_count = 0
-    n_rst = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):
             if restart_interval and rst_count == restart_interval:
-                rst_n = segs[seg_idx][1]
-                if rst_n is None:
-                    raise ValueError("missing restart marker")
-                if rst_n != (n_rst & 7):
-                    raise ValueError("restart marker out of sequence")
-                if reader.pos > reader.nbits:
-                    raise ValueError("truncated entropy-coded data")
-                seg_idx += 1  # _split_entropy guarantees a following seg
-                reader = _EntropyReader(segs[seg_idx][0])
-                n_rst = (n_rst + 1) & 7
+                reader = _next_reader(segs, seg_idx, reader)
+                seg_idx += 1
                 preds = [0] * len(comps)
                 rst_count = 0
             rst_count += 1
             for ci, (_cid, hs, vs, _tq) in enumerate(comps):
                 dc_tab, ac_tab = comp_tabs[ci]
-                ks = comp_ks[ci]
-                vals = comp_vals[ci]
+                coef = coefs[ci]
                 bw = comp_bw[ci]
                 for by in range(vs):
                     base = ((my * vs + by) * bw + mx * hs) * 64
                     for bx in range(hs):
                         preds[ci] = reader.decode_block(
-                            dc_tab, ac_tab, preds[ci], ks, vals, base + 64 * bx
+                            dc_tab, ac_tab, preds[ci], coef, base + 64 * bx
                         )
     if reader.pos > reader.nbits:
         raise ValueError("truncated entropy-coded data")
-    for ci in range(len(comps)):
-        if comp_ks[ci]:
-            comp_blocks[ci].reshape(-1)[
-                np.asarray(comp_ks[ci], dtype=np.int64)
-            ] = np.asarray(comp_vals[ci], dtype=np.int64)
 
 
 def _decode_progressive_scan(
@@ -975,33 +1004,9 @@ def _decode_progressive_scan(
             raise ValueError("scan references undefined DHT")
         luts.append(lut)
 
-    segs, end = _split_entropy(data, seg_end)
-    state = {
-        "seg_idx": 0,
-        "reader": _EntropyReader(segs[0][0]),
-        "preds": [0] * len(comps),
-        "eobrun": 0,
-        "rst_count": 0,
-        "n_rst": 0,
-    }
-
-    def restart_boundary():
-        rst_n = segs[state["seg_idx"]][1]
-        if rst_n is None:
-            raise ValueError("missing restart marker")
-        if rst_n != (state["n_rst"] & 7):
-            raise ValueError("restart marker out of sequence")
-        if state["reader"].pos > state["reader"].nbits:
-            raise ValueError("truncated entropy-coded data")
-        state["seg_idx"] += 1
-        state["reader"] = _EntropyReader(segs[state["seg_idx"]][0])
-        state["n_rst"] = (state["n_rst"] + 1) & 7
-        state["preds"] = [0] * len(comps)
-        state["eobrun"] = 0
-        state["rst_count"] = 0
-
     def units():
-        """Restart units: one MCU (interleaved) or one block
+        """Restart units as lists of (scan component, component,
+        coefficient offset): one MCU (interleaved) or one block
         (non-interleaved, the component's own ceil(dim/8) grid — NOT the
         MCU-padded grid, T.81 A.2.2)."""
         if ns > 1:
@@ -1012,11 +1017,9 @@ def _decode_progressive_scan(
                         _cid, hs, vs, _tq = comps[ci]
                         bw = comp_bw[ci]
                         for by in range(vs):
+                            row = (my * vs + by) * bw + mx * hs
                             for bx in range(hs):
-                                out.append(
-                                    (si, ci,
-                                     (my * vs + by) * bw + mx * hs + bx)
-                                )
+                                out.append((si, ci, (row + bx) * 64))
                     yield out
         else:
             si, (ci, _td, _ta) = 0, scan_comps[0]
@@ -1028,109 +1031,160 @@ def _decode_progressive_scan(
             bw = comp_bw[ci]
             for by in range(bh_eff):
                 for bx in range(bw_eff):
-                    yield [(si, ci, by * bw + bx)]
+                    yield [(si, ci, (by * bw + bx) * 64)]
 
+    coefs = [memoryview(b.reshape(-1)) for b in comp_blocks]
+    segs, end = _split_entropy(data, seg_end)
+    seg_idx = 0
+    reader = _EntropyReader(segs[0][0])
+    preds = [0] * len(comps)
+    eobrun = 0
+    rst_count = 0
     for unit in units():
-        if restart_interval and state["rst_count"] == restart_interval:
-            restart_boundary()
-        state["rst_count"] += 1
-        reader = state["reader"]
-        for si, ci, idx in unit:
-            blk = comp_blocks[ci][idx]
+        if restart_interval and rst_count == restart_interval:
+            reader = _next_reader(segs, seg_idx, reader)
+            seg_idx += 1
+            preds = [0] * len(comps)
+            eobrun = 0
+            rst_count = 0
+        rst_count += 1
+        for si, ci, base in unit:
+            coef = coefs[ci]
             if dc_scan:
                 if refine:
                     if reader.receive(1):
-                        blk[0] = int(blk[0]) | p1
+                        coef[base] |= p1
                 else:
-                    t = reader.huff(luts[si])
-                    if t > 11:
-                        raise ValueError("invalid DC category")
-                    state["preds"][ci] += _extend(reader.receive(t), t)
-                    blk[0] = state["preds"][ci] << al
-            elif not refine:
-                state["eobrun"] = _ac_first_block(
-                    reader, blk, ss, se, al, luts[si], state["eobrun"]
+                    preds[ci] += reader.dc_diff(luts[si])
+                    coef[base] = preds[ci] << al
+            elif refine:
+                eobrun = _ac_refine_block(
+                    reader, coef, base, ss, se, p1, luts[si], eobrun
                 )
             else:
-                state["eobrun"] = _ac_refine_block(
-                    reader, blk, ss, se, p1, luts[si], state["eobrun"]
+                eobrun = _ac_first_block(
+                    reader, coef, base, ss, se, al, luts[si], eobrun
                 )
-    if state["reader"].pos > state["reader"].nbits:
+    if reader.pos > reader.nbits:
         raise ValueError("truncated entropy-coded data")
     return end
 
 
-def _ac_first_block(reader, blk, ss, se, al, ac_lut, eobrun):
-    """AC first scan (Ah=0) for one block; returns the updated EOB run."""
+def _ac_first_block(reader, coef, base, ss, se, al, ac_lut, eobrun):
+    """AC first scan (Ah=0) for one block; returns the updated EOB run.
+    Bit reads are inlined on the reader's peek array, as in
+    ``decode_block``."""
     if eobrun:
         return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = reader.huff(ac_lut)
-        r, s = rs >> 4, rs & 15
+    peek = reader.peek
+    p = reader.pos
+    if p >= reader.nbits:
+        raise ValueError("truncated entropy-coded data")
+    kb = base + ss
+    last = base + se
+    while kb <= last:
+        v = ac_lut[peek[p]]
+        val = v >> 13
+        if val:  # fast AC
+            kb += (v >> 4) & 15
+            if kb > last:
+                raise ValueError("AC run past spectral band")
+            coef[kb] = val << al
+            kb += 1
+            p += (v >> 8) & 31
+            continue
+        if v == 0:
+            raise ValueError("invalid Huffman code")
+        ln = (v >> 8) & 31
+        r = (v >> 4) & 15
+        s = v & 15
         if s == 0:
+            p += ln
             if r == 15:  # ZRL
-                k += 16
+                kb += 16
                 continue
             # EOBn: run of (1<<r)+receive(r) blocks ending here, this
             # block included
-            return (1 << r) - 1 + (reader.receive(r) if r else 0)
-        k += r
-        if k > se:
+            reader.pos = p
+            return (1 << r) - 1 + reader.receive(r)
+        kb += r
+        if kb > last:
             raise ValueError("AC run past spectral band")
-        extra = reader.receive(s)
-        blk[k] = (
-            extra if extra >= (1 << (s - 1)) else extra - (1 << s) + 1
-        ) << al
-        k += 1
+        coef[kb] = _extend(peek[p + ln] >> (16 - s), s) << al
+        kb += 1
+        p += ln + s
+    reader.pos = p
     return 0
 
 
-def _ac_refine_block(reader, blk, ss, se, p1, ac_lut, eobrun):
+def _ac_refine_block(reader, coef, base, ss, se, p1, ac_lut, eobrun):
     """AC refinement scan (Ah>0) for one block — T.81 G.1.2.3: newly
     significant coefficients arrive as run/1 symbols + sign; coefficients
     already nonzero receive one correction bit each as the run advances
-    (and through the EOB region). Returns the updated EOB run."""
+    (and through the EOB region). Returns the updated EOB run. Bit reads
+    are inlined on the reader's peek array, as in ``decode_block``."""
     m1 = -p1
-    lst = blk.tolist()
-    k = ss
+    peek = reader.peek
+    p = reader.pos
+    nb = reader.nbits
+    kb = base + ss
+    last = base + se
     if eobrun == 0:
-        while k <= se:
-            rs = reader.huff(ac_lut)
-            r, s = rs >> 4, rs & 15
+        if p >= nb:
+            raise ValueError("truncated entropy-coded data")
+        while kb <= last:
+            v = ac_lut[peek[p]]
+            if v == 0:
+                raise ValueError("invalid Huffman code")
+            r = (v >> 4) & 15
+            s = v & 15
             newval = 0
             if s:
                 if s != 1:
                     raise ValueError("invalid AC refinement magnitude")
-                newval = p1 if reader.receive(1) else m1
-            elif r != 15:
-                eobrun = (1 << r) + (reader.receive(r) if r else 0)
-                break
+                if v >> 13:  # fast entry: sign inside the peek
+                    newval = p1 if v > 0 else m1
+                    p += (v >> 8) & 31
+                else:  # 16-bit code: sign bit just past the peek
+                    ln = (v >> 8) & 31
+                    newval = p1 if peek[p + ln] >> 15 else m1
+                    p += ln + 1
+            else:
+                p += (v >> 8) & 31
+                if r != 15:
+                    reader.pos = p
+                    eobrun = (1 << r) + reader.receive(r)
+                    p = reader.pos
+                    break
             # advance past r zero-history coefficients (16 for ZRL),
             # emitting a correction bit at every nonzero-history one
-            while k <= se:
-                c = lst[k]
+            while kb <= last:
+                c = coef[kb]
                 if c:
-                    if reader.receive(1) and (c & p1) == 0:
-                        lst[k] = c + (p1 if c >= 0 else m1)
-                else:
-                    if r == 0:
-                        break
+                    if peek[p] >> 15 and (c & p1) == 0:
+                        coef[kb] = c + (p1 if c >= 0 else m1)
+                    p += 1
+                elif r:
                     r -= 1
-                k += 1
-            if newval and k <= se:
-                lst[k] = newval
-            k += 1
+                else:
+                    break
+                kb += 1
+            if newval and kb <= last:
+                coef[kb] = newval
+            kb += 1
     if eobrun:
         # EOB region covers the rest of this block: correction bits only
-        while k <= se:
-            c = lst[k]
+        while kb <= last:
+            c = coef[kb]
             if c:
-                if reader.receive(1) and (c & p1) == 0:
-                    lst[k] = c + (p1 if c >= 0 else m1)
-            k += 1
+                if p >= nb:  # blocks of an EOB run have no entry check
+                    raise ValueError("truncated entropy-coded data")
+                if peek[p] >> 15 and (c & p1) == 0:
+                    coef[kb] = c + (p1 if c >= 0 else m1)
+                p += 1
+            kb += 1
         eobrun -= 1
-    blk[:] = lst
+    reader.pos = p
     return eobrun
 
 
@@ -1220,6 +1274,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0 / SOF1 / SOF2
             if frame is not None:
                 raise ValueError("multiple SOF markers")
+            if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+                raise ValueError("truncated SOF segment")
             prec, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
             if prec != 8:
                 raise ValueError(f"unsupported sample precision {prec}")
@@ -1282,7 +1338,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         nat = np.zeros_like(zz)
         nat[:, _ZZ] = zz
         coeffs = (nat * qtabs[tq]).reshape(-1, 8, 8).astype(np.float64)
-        pix = np.einsum("xu,nuv,yv->nxy", _DCT.T, coeffs, _DCT.T)
+        pix = _DCT.T @ coeffs @ _DCT
         bw = comp_bw[ci]
         bh = len(zz) // bw
         plane = (

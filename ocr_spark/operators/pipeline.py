@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.config import BLOCK_SEPARATOR, LINE_HEIGHT, MAX_LINE_WIDTH
+from ocr_spark.kernels.gif import GIF_MAGICS, iter_gif_frames
 from ocr_spark.kernels.jpeg import JPEG_MAGIC, jpeg_to_gray_float
 from ocr_spark.kernels.png import PNG_MAGIC, png_to_gray_float
 
@@ -82,10 +83,8 @@ def _lines_of_doc(html_text: str):
                 img = jpeg_to_gray_float(payload)
             except ValueError:
                 continue  # corrupt JPEG: skip the image, never the task
-        elif payload[:6] in (b"GIF87a", b"GIF89a"):
+        elif payload[:6] in GIF_MAGICS:
             try:
-                from ocr_spark.kernels.gif import iter_gif_frames
-
                 for _no, rgb in iter_gif_frames(payload, max_frames=1):
                     img = rgb.astype(np.float32).mean(axis=2) / 255.0
                     break
@@ -185,10 +184,13 @@ def detect_image_lines(pages: DataFrame) -> DataFrame:
 
 # fused-stage row schema: one 'html' row per document (text carries the
 # extracted blocks) + one 'line' row per embedded image line (strip/width
-# carry the tensor; text is filled by the recognition stage).
+# carry the tensor; text is filled by the recognition stage). A strip
+# crosses between the two stages as its raw float32 bytes (C order,
+# LINE_HEIGHT × MAX_LINE_WIDTH): one copy on each side and no Python
+# object per pixel.
 _FUSED_SCHEMA = (
     "url string, kind string, line_id int, text string, "
-    "strip array<float>, width long"
+    "strip binary, width long"
 )
 
 
@@ -215,7 +217,7 @@ def _extract_and_detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
                 kinds.append("line")
                 ids.append(i)
                 texts.append("")
-                strips.append(strip.ravel().tolist())
+                strips.append(strip.astype(np.float32, copy=False).tobytes())
                 widths.append(width)
         yield pd.DataFrame(
             {
@@ -268,14 +270,9 @@ def _recognize_mixed(recognizer: str = "conv"):
             texts = pdf["text"].to_numpy(dtype=object, copy=True)
             mask = (pdf["kind"] == "line").to_numpy()
             if mask.any():
-                strips = np.stack(
-                    [
-                        np.asarray(s, dtype=np.float32).reshape(
-                            LINE_HEIGHT, MAX_LINE_WIDTH
-                        )
-                        for s in pdf["strip"][mask]
-                    ]
-                )
+                strips = np.frombuffer(
+                    b"".join(pdf["strip"][mask]), dtype=np.float32
+                ).reshape(-1, LINE_HEIGHT, MAX_LINE_WIDTH)
                 texts[mask] = rec(
                     strips, pdf["width"][mask].to_numpy(np.int64)
                 )

@@ -57,6 +57,172 @@ def test_lzw_kwkwk_case():
     np.testing.assert_array_equal(_lzw_decode(enc, 2, 64), seq)
 
 
+def _lzw_decode_reference(data: bytes, min_code: int, expected: int):
+    """The per-code dictionary loop the vectorized decoder replaced, kept
+    here as the differential oracle: same pixels, or ValueError on both."""
+    if not 2 <= min_code <= 8:
+        raise ValueError(f"bad LZW min code size {min_code}")
+    clear = 1 << min_code
+    eoi = clear + 1
+    width = min_code + 1
+    base = [bytes([i]) for i in range(clear)] + [b"", b""]
+    table = list(base)
+    out = bytearray()
+    acc = nbits = pos = 0
+    prev = None
+    while True:
+        while nbits < width:
+            if pos >= len(data):
+                raise ValueError("truncated LZW stream")
+            acc |= data[pos] << nbits
+            pos += 1
+            nbits += 8
+        code = acc & ((1 << width) - 1)
+        acc >>= width
+        nbits -= width
+        if code == clear:
+            table, width, prev = list(base), min_code + 1, None
+            continue
+        if code == eoi:
+            break
+        if prev is None:
+            if code >= len(table):
+                raise ValueError("bad first LZW code")
+            entry = table[code]
+        elif code < len(table):
+            entry = table[code]
+            table.append(prev + entry[:1])
+        elif code == len(table):
+            entry = prev + prev[:1]
+            table.append(entry)
+        else:
+            raise ValueError("LZW code out of range")
+        out.extend(entry)
+        if len(out) > expected:
+            raise ValueError("LZW output exceeds frame size")
+        prev = entry
+        if len(table) == (1 << width) and width < 12:
+            width += 1
+    if len(out) != expected:
+        raise ValueError(f"LZW yielded {len(out)} of {expected} pixels")
+    return np.frombuffer(bytes(out), dtype=np.uint8)
+
+
+def _pack_codes(codes, min_code=8) -> bytes:
+    """LSB-first code packer with the decoder's width schedule (the
+    width after ``j`` codes since a clear is fixed by ``j`` alone), so
+    tests can place any code at any table size."""
+    clear = 1 << min_code
+    out = bytearray()
+    acc = nbits = j = 0
+    for c in codes:
+        width = min(12, max(min_code + 1, (clear + 1 + j).bit_length()))
+        acc |= c << nbits
+        nbits += width
+        while nbits >= 8:
+            out.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+        j = 0 if c == clear else j + 1
+    if nbits:
+        out.append(acc & 0xFF)
+    return bytes(out)
+
+
+def _both(data, min_code, expected):
+    """(outcome, pixels) of the decoder and of the reference loop."""
+    res = []
+    for fn in (_lzw_decode, _lzw_decode_reference):
+        try:
+            res.append(("ok", fn(data, min_code, expected).tobytes()))
+        except ValueError:
+            res.append(("error", None))
+    return res
+
+
+@pytest.mark.parametrize("switch", [512, 2048])
+def test_lzw_kwkwk_at_width_switch(switch):
+    """KwKwK codes exactly where the width grows (9→10 at a 512-entry
+    table, 11→12 at 2048): the last code read at the old width and the
+    first read at the new one each reference the entry being defined."""
+    clear, eoi = 256, 257
+    j_last = switch - 1 - (clear + 1)  # code j is read at table size 257+j
+    lits = _rng(11).integers(0, 256, j_last).tolist()
+    codes = [clear] + lits + [switch - 1, switch, eoi]
+    data = _pack_codes(codes)
+    # the two self-referencing entries: last literal doubled, then that
+    # span plus its own first pixel
+    expected = lits + [lits[-1]] * 5
+    ref = _lzw_decode_reference(data, 8, len(expected))
+    assert ref.tolist() == expected
+    np.testing.assert_array_equal(_lzw_decode(data, 8, len(expected)), ref)
+
+
+def test_lzw_full_table_keeps_width_12():
+    """A table that fills to 4096 with no clear code: every later code is
+    still read at 12 bits and may reference any defined entry."""
+    clear, eoi = 256, 257
+    n = 4200  # past the 4096-entry fill point (j = 3839)
+    codes = [clear] + _rng(12).integers(0, 256, n).tolist()
+    codes += [4095, 300, 4000, eoi]  # entries of two literals each
+    data = _pack_codes(codes)
+    ref = _lzw_decode_reference(data, 8, n + 6)
+    np.testing.assert_array_equal(_lzw_decode(data, 8, n + 6), ref)
+
+
+@pytest.mark.parametrize("j", [1, 2, 255, 1000, 3000])
+def test_lzw_code_past_table_raises(j):
+    """Code j after a clear may be at most the entry it defines
+    (clear + 1 + j, the KwKwK case); one more is out of range (at widths
+    where it is representable)."""
+    clear, eoi = 256, 257
+    codes = [clear] + [7] * j + [clear + 2 + j, eoi]
+    with pytest.raises(ValueError, match="out of range"):
+        _lzw_decode(_pack_codes(codes), 8, 10**6)
+
+
+def test_lzw_back_to_back_clears_stay_linear():
+    """~200k consecutive clear codes (each 9 bits, resetting nothing)
+    decode in linear time: a decoder that re-scans the rest of the
+    stream at every clear would take minutes here."""
+    import time
+
+    clear, eoi = 256, 257
+    eight = _pack_codes([clear] * 8)  # 72 bits: byte-aligned repeat unit
+    data = eight * 25_000 + _pack_codes([clear, 5, eoi])
+    t0 = time.perf_counter()
+    out = _lzw_decode(data, 8, 1)
+    assert time.perf_counter() - t0 < 10.0
+    assert out.tolist() == [5]
+
+
+def test_lzw_matches_reference_loop_on_random_streams():
+    """Differential fuzz against the per-code loop: valid encodings of
+    low- and high-entropy rasters, bit flips, truncations and raw random
+    bytes at every min code size give the same pixels or both raise."""
+    rng = _rng(21)
+    decoded = 0
+    for it in range(1500):
+        min_code = int(rng.integers(2, 9))
+        if it % 3 == 0:
+            data = rng.integers(0, 256, int(rng.integers(0, 60)), np.uint8)
+            data, expected = data.tobytes(), int(rng.integers(0, 80))
+        else:
+            hi = (1 << min_code) if it % 3 == 1 else int(rng.integers(1, 4))
+            arr = rng.integers(0, hi, int(rng.integers(1, 600)), np.uint8)
+            data, expected = _lzw_encode(arr, min_code), len(arr)
+            if rng.random() < 0.5:
+                b = bytearray(data)
+                b[int(rng.integers(0, len(b)))] ^= 1 << int(rng.integers(0, 8))
+                data = bytes(b)
+            if rng.random() < 0.2:
+                data = data[: int(rng.integers(0, len(data) + 1))]
+        new, ref = _both(data, min_code, expected)
+        assert new == ref, (it, min_code, expected, data.hex())
+        decoded += new[0] == "ok"
+    assert decoded > 400  # the comparison covered real decodes
+
+
 def test_animation_composition_transparency_and_disposal():
     """Hand-built animation: frame 2 is a sub-rectangle with a
     transparent index over frame 1's canvas — the composite shows frame

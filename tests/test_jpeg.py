@@ -128,6 +128,8 @@ def test_jpeg_dims_header_only():
     assert jpeg_dims(
         encode_jpeg(np.zeros((10, 11, 3), np.uint8))
     ) == (11, 10, 3)
+    with pytest.raises(ValueError, match="SOF"):  # SOF shorter than 6 bytes
+        jpeg_dims(b"\xff\xd8\xff\xc0\x00\x02")
 
 
 # ---------------------------------------------------------------------------
@@ -280,6 +282,11 @@ def test_baseline_scan_relabelled_progressive_rejected():
         lambda b: b[: len(b) // 2],
         lambda b: b.replace(b"\xff\xda", b"\xff\xd9", 1),
         lambda b: b[:-10],
+        # SOF shorter than 6 + 3*Nf bytes: an empty body, and a body that
+        # declares 3 components but carries 1
+        lambda b: b[:2] + b"\xff\xc0\x00\x02",
+        lambda b: b[:2] + b"\xff\xc0\x00\x0b"
+        + struct.pack(">BHHB", 8, 8, 8, 3) + bytes([1, 0x11, 0]),
     ],
 )
 def test_malformed_raises(mutate):
